@@ -1229,7 +1229,11 @@ def q_boiler_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # totals come map-only from the token count (ceil(n/3) segments per
-    # doc) -- no third re-segmentation/explode branch of the corpus
+    # doc) -- no third re-segmentation/explode branch of the corpus.
+    # Precondition: documents.text is non-NULL.  size(NULL) is NULL, so a
+    # NULL-text doc would surface here with n_seg NULL, where the explode
+    # path and the DuckDB oracle drop it; tests/test_fixture_guards.py
+    # enforces non-NULL text on every fixture scale.
     tot = toks.select(
         "doc_id", F.ceil(F.size("t") / 3).cast("bigint").alias("n_seg")
     )

@@ -3107,16 +3107,14 @@ def drop_dates_sink(
     - batch straddling the drop set: rewrite the attempt dir WITHOUT the
       dropped date partitions into a fresh attempt and publish it under
       a FRESH manifest name superseding the victim
-      (:func:`_swap_batch_manifest` -- one new-object publish, no
-      same-name delete->rename listing gap), so a concurrent reader
-      sees the old rows or the new ones, never half and never neither.
+      (:func:`_rewrite_batch` -> :func:`_swap_batch_manifest` -- one
+      new-object publish, no same-name delete->rename listing gap), so
+      a concurrent reader sees the old rows or the new ones, never half
+      and never neither.
 
     Data files are only ever deleted later by :func:`vacuum_sink` under
     the retention rule, so in-flight readers finish their scans.
     Returns the names of the manifests republished or tombstoned."""
-    import json
-    import uuid
-
     fs, HPath = _hadoop_fs(spark, table_path)
     drop = set(dates)
     touched = []
@@ -3139,61 +3137,20 @@ def drop_dates_sink(
         hit = drop & set(mdates)
         if not hit:
             continue
-        keep = sorted(set(mdates) - drop)
-        if not keep:
-            tomb = f"d-{uuid.uuid4().hex[:12]}.json"
-            _publish_manifest(
-                fs, HPath, f"{table_path}/_manifests", tomb,
-                json.dumps(
-                    {"kind": "drop", "supersedes": [m["name"]]},
-                    sort_keys=True,
-                ).encode("utf-8"),
-            )
-            touched.append(tomb)
+        if not set(mdates) - drop:
+            touched.append(_publish_drop(fs, HPath, table_path, [m["name"]]))
             continue
         from pyspark.sql import functions as F
 
-        kept_df = spark.read.parquet(f"{table_path}/{m['dir']}").filter(
-            ~F.col("collect_date").isin(sorted(hit))
+        src = spark.read.parquet(f"{table_path}/{m['dir']}")
+        rec = _rewrite_batch(
+            spark, fs, HPath, table_path, m,
+            src.filter(~F.col("collect_date").isin(sorted(hit))),
+            int(m["rows"]) if "rows" in m else src.count(),
+            (),
         )
-        attempt = f"_data/r-{uuid.uuid4().hex[:8]}"
-        (
-            kept_df.repartition("collect_date")
-            .write.mode("overwrite")
-            .partitionBy("collect_date")
-            .parquet(f"{table_path}/{attempt}")
-        )
-        files = sorted(
-            f"{attempt}/{p.getPath().getParent().getName()}/"
-            f"{p.getPath().getName()}"
-            for p in fs.globStatus(
-                HPath(f"{table_path}/{attempt}/collect_date=*/*")
-            )
-            if not p.getPath().getName().startswith(("_", "."))
-        )
-        payload = dict(m)
-        payload.pop("ts", None)
-        payload.update({"dir": attempt, "files": files, "dates": keep})
-        # exact rows stat from the written layout (footer-only count --
-        # a stale count would missize a later compaction's bloom) and a
-        # fresh bloom sidecar when the victim had one; the superset
-        # min/max stats stay (wider intervals are prune-safe)
-        rows_new = int(
-            spark.read.parquet(f"{table_path}/{attempt}").count()
-        )
-        payload["rows"] = rows_new
-        if rows_new and fs.exists(
-            HPath(f"{table_path}/{m['dir']}/_bloom.json")
-        ):
-            _write_batch_bloom(
-                spark, fs, HPath, table_path, attempt, files,
-                kept_df, rows_new,
-            )
-        # fresh-name supersede swap, not a same-name overwrite: no
-        # listing gap for concurrent readers (see _swap_batch_manifest)
-        touched.append(
-            _swap_batch_manifest(fs, HPath, table_path, m, payload)
-        )
+        if rec["kind"] != "clean":
+            touched.append(rec["new_name"])
     return touched
 
 
@@ -3337,6 +3294,165 @@ def _swap_entry(victim: dict, payload: dict) -> "tuple[str, dict]":
     return new_name, payload
 
 
+def _publish_drop(fs, HPath, table_path: str, victims: "list[str]") -> str:
+    """Retire ``victims`` at one atomic publish: a dir-less
+    ``kind: "drop"`` tombstone manifest superseding them, zero data IO
+    (:func:`vacuum_sink` reclaims their attempt dirs later).  Returns
+    the tombstone's name."""
+    import json
+    import uuid
+
+    tomb = f"d-{uuid.uuid4().hex[:12]}.json"
+    _publish_manifest(
+        fs, HPath, f"{table_path}/_manifests", tomb,
+        json.dumps(
+            {"kind": "drop", "supersedes": sorted(victims)}, sort_keys=True
+        ).encode("utf-8"),
+    )
+    return tomb
+
+
+def _pad_to_schema(frame: DataFrame, schema) -> DataFrame:
+    """``frame`` plus every ``schema`` field it lacks as a typed NULL
+    column: how a batch written before the sink widened evaluates
+    predicates and SETs over sink-wide columns (SQL semantics -- the
+    column exists table-wide, old rows hold NULL)."""
+    from pyspark.sql import functions as F
+
+    have = set(frame.columns)
+    missing = [f for f in schema.fields if f.name not in have]
+    if not missing:
+        return frame  # uniform sinks keep the plain scan plan
+    return frame.select(
+        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+    )
+
+
+def _fan_out(spark: SparkSession, fn, items: list) -> list:
+    """``[fn(x) for x in items]`` on a bounded driver thread pool,
+    results in input order so summaries are deterministic.  Each call
+    is an independent Spark job plus at most one fresh-name manifest
+    publish, so threads never contend on an object.  The bound is the
+    session's ``defaultParallelism`` (the host's task slots): more
+    concurrent rewrite jobs would only queue for the same slots.  A
+    failure propagates once the started calls finish and the queued
+    ones are cancelled: batches already swapped stay committed, the
+    rest untouched -- the per-batch resume contract."""
+    workers = min(len(items), spark.sparkContext.defaultParallelism)
+    if workers <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        return list(pool.map(fn, items))
+
+
+def _rewrite_batch(
+    spark: SparkSession,
+    fs,
+    HPath,
+    table_path: str,
+    victim: dict,
+    new_df: DataFrame,
+    total: int,
+    set_cols,
+    hits=None,
+) -> dict:
+    """Copy-on-write one live batch: write ``new_df``, the rows that
+    replace ``victim`` (``total`` rows), into a fresh attempt dir and
+    publish what the WRITTEN counts decide:
+
+    - no rows left: a drop tombstone (:func:`_publish_drop`);
+    - every row kept and none hit (``hits`` is the ``Observation`` whose
+      metrics count the rows this write changed): the rewrite changed
+      nothing, so the attempt is discarded and the batch is ``clean``;
+    - otherwise a fresh-name swap (:func:`_swap_batch_manifest`) whose
+      payload describes the written layout -- ``dir``/``files``/
+      ``dates`` from the listing, ``rows`` from the parquet footers, the
+      written ``schema`` (a SET may add a column) -- with the
+      ``set_cols`` min/max stats dropped (their intervals no longer
+      bound the data; a removal only narrows, so the rest stay
+      prune-safe) and the bloom sidecar rebuilt when the victim had one.
+
+    Counting the written layout, never a separate probe, keeps the
+    manifest truthful under a non-deterministic predicate (the reason
+    Delta/Iceberg materialize their matched-file lists).  Returns
+    ``{"kind": "clean" | "dropped" | "swapped", "victim", "new_name"
+    (the tombstone or swap manifest), "rows_deleted", "hits"}``."""
+    import json
+    import uuid
+
+    attempt = f"_data/u-{uuid.uuid4().hex[:8]}"
+    (
+        new_df.repartition("collect_date")
+        .write.mode("overwrite")
+        .partitionBy("collect_date")
+        .parquet(f"{table_path}/{attempt}")
+    )
+    files = sorted(
+        f"{attempt}/{p.getPath().getParent().getName()}/"
+        f"{p.getPath().getName()}"
+        for p in fs.globStatus(
+            HPath(f"{table_path}/{attempt}/collect_date=*/*")
+        )
+        if not p.getPath().getName().startswith(("_", "."))
+    )
+    rows_new = (
+        int(spark.read.parquet(f"{table_path}/{attempt}").count())
+        if files
+        else 0
+    )
+    n_hits = (
+        {k: int(v or 0) for k, v in hits.get.items()}
+        if hits is not None
+        else {}
+    )
+    name = victim["name"]
+    if rows_new == total and not any(n_hits.values()):
+        fs.delete(HPath(f"{table_path}/{attempt}"), True)
+        return {"kind": "clean"}
+    if rows_new == 0:
+        fs.delete(HPath(f"{table_path}/{attempt}"), True)
+        return {
+            "kind": "dropped", "victim": name,
+            "new_name": _publish_drop(fs, HPath, table_path, [name]),
+            "rows_deleted": total, "hits": n_hits,
+        }
+    payload = dict(victim)
+    payload.pop("ts", None)
+    payload.update(
+        {
+            "dir": attempt,
+            "files": files,
+            "dates": sorted(
+                {f.split("collect_date=")[1].split("/")[0] for f in files}
+            ),
+            "rows": rows_new,
+            "schema": json.loads(new_df.schema.json()),
+        }
+    )
+    # a fresh dict, never an in-place pop: the victim's nested stats may
+    # be shared with the parsed-snapshot cache (_SNAP_CACHE)
+    stats = {
+        c: s
+        for c, s in (payload.pop("stats", None) or {}).items()
+        if c not in set_cols
+    }
+    if stats:
+        payload["stats"] = stats
+    if fs.exists(HPath(f"{table_path}/{victim['dir']}/_bloom.json")):
+        _write_batch_bloom(
+            spark, fs, HPath, table_path, attempt, files, new_df, rows_new,
+        )
+    return {
+        "kind": "swapped", "victim": name,
+        "new_name": _swap_batch_manifest(
+            fs, HPath, table_path, victim, payload
+        ),
+        "rows_deleted": total - rows_new, "hits": n_hits,
+    }
+
+
 def _dml_predicate(
     where: "str | None",
     eq: "dict[str, object] | None",
@@ -3379,6 +3495,13 @@ def _dml_predicate(
     return pred
 
 
+# candidate count above which _dml_sink counts every candidate's
+# matches in ONE union job instead of one count() job per batch: below
+# it the per-batch jobs are few, above it they dominate a point
+# statement (bloom false positives grow as fpp x N)
+_PROBE_UNION_MIN = 16
+
+
 def _dml_sink(
     spark: SparkSession,
     table_path: str,
@@ -3388,8 +3511,6 @@ def _dml_sink(
     ranges: "dict[str, tuple[object, object]] | None",
     set_exprs: "dict[str, str] | None",
     force: bool = False,
-    rewrite_parallelism: int = 4,
-    probe_union_min: int = 16,
 ) -> dict:
     """Shared core of :func:`delete_sink_where` /
     :func:`update_sink_where` -- copy-on-write at BATCH granularity,
@@ -3405,13 +3526,15 @@ def _dml_sink(
        the scan); zero matches -> untouched (bloom false positives cost
        one cheap probe scan, never a rewrite);
     3. DELETE with every row matching -> publish a dir-less ``drop``
-       tombstone superseding the batch (no data IO at all); otherwise
-       rewrite the surviving/updated rows into a fresh attempt dir and
-       publish it under a FRESH manifest name that supersedes the
-       victim (:func:`_swap_batch_manifest` -- a single new-object
-       publish, so concurrent readers see old rows or new, never half
-       and never neither), the identical move :func:`drop_dates_sink`
-       uses for straddlers.
+       tombstone superseding the batch (:func:`_publish_drop`, no data
+       IO at all); otherwise rewrite the surviving/updated rows through
+       :func:`_rewrite_batch` -- the identical move :func:`merge_sink`
+       and :func:`drop_dates_sink` straddlers use: a fresh attempt dir
+       published under a FRESH manifest name that supersedes the victim
+       (:func:`_swap_batch_manifest` -- a single new-object publish, so
+       concurrent readers see old rows or new, never half and never
+       neither).  Candidates probe and rewrite concurrently
+       (:func:`_fan_out`).
 
     Change-data-feed / tail semantics: the swap manifest lists the
     victim's batch key in its ``supersedes``, so a caught-up cursor
@@ -3432,9 +3555,6 @@ def _dml_sink(
     batches; UPDATE re-runs are no-ops when the SET makes the predicate
     false, else apply-twice -- use self-falsifying predicates for
     non-idempotent SETs)."""
-    import json
-    import uuid
-
     from pyspark.sql import functions as F
 
     fs, HPath = _hadoop_fs(spark, table_path)
@@ -3476,7 +3596,18 @@ def _dml_sink(
     import threading
 
     target_schema = None  # sink-wide widened schema, computed on demand
-    _ts_lock = threading.Lock()  # once, even under rewrite_parallelism
+    _ts_lock = threading.Lock()  # once, even across _fan_out's threads
+
+    def _sink_schema():
+        # lazy: uniform sinks never compute the merged schema; resolved
+        # from the manifests' recorded schemas when available --
+        # metadata only, no N-frame union analysis
+        nonlocal target_schema
+        with _ts_lock:
+            if target_schema is None:
+                target_schema = _sink_merged_schema(spark, table_path, live)
+        return target_schema
+
     def _dml_one(m: dict, pre_match: "int | None" = None) -> dict:
         src = spark.read.option("mergeSchema", "true").parquet(
             f"{table_path}/{m['dir']}"
@@ -3487,27 +3618,6 @@ def _dml_sink(
         # sink columns as typed NULLs for EVALUATION (pred NULL keeps
         # the row), computed lazily so uniform sinks pay nothing.  A
         # column absent from the whole sink still fails loudly below.
-        def _padded(frame):
-            # missing sink-wide columns as typed NULLs (lazy: uniform
-            # sinks never compute the merged schema; resolved from the
-            # manifests' recorded schemas when available -- metadata
-            # only, no N-frame union analysis)
-            nonlocal target_schema
-            with _ts_lock:
-                if target_schema is None:
-                    target_schema = _sink_merged_schema(
-                        spark, table_path, live
-                    )
-            have = set(frame.columns)
-            return frame.select(
-                "*",
-                *[
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in target_schema.fields
-                    if f.name not in have
-                ],
-            )
-
         eval_df = src
         n_match = None
         if pre_match is not None:
@@ -3525,7 +3635,7 @@ def _dml_sink(
                 except Exception:
                     need_pad = True
             if need_pad:
-                eval_df = _padded(src)
+                eval_df = _pad_to_schema(src, _sink_schema())
             n_match = pre_match
         elif set_exprs is None or all(
             c in src.columns for c in set_exprs
@@ -3535,7 +3645,7 @@ def _dml_sink(
             except Exception:
                 n_match = None  # pred references a widened column
         if n_match is None:
-            eval_df = _padded(src)
+            eval_df = _pad_to_schema(src, _sink_schema())
             n_match = eval_df.filter(hit).count()
         if set_exprs is not None:
             bad = [c for c in set_exprs if c not in eval_df.columns]
@@ -3543,20 +3653,18 @@ def _dml_sink(
                 raise ValueError(f"SET columns not in sink schema: {bad}")
         if n_match == 0:
             return {"kind": "clean"}
+        total = int(m["rows"]) if "rows" in m else src.count()
+        upd_obs = None
         if set_exprs is None:
-            total = int(m["rows"]) if "rows" in m else src.count()
             if n_match == total:
                 # whole batch gone: tombstone, zero data IO
-                tomb = f"d-{uuid.uuid4().hex[:12]}.json"
-                _publish_manifest(
-                    fs, HPath, f"{table_path}/_manifests", tomb,
-                    json.dumps(
-                        {"kind": "drop", "supersedes": [m["name"]]},
-                        sort_keys=True,
-                    ).encode("utf-8"),
-                )
-                return {"kind": "dropped", "victim": m["name"],
-                        "rows_deleted": total}
+                return {
+                    "kind": "dropped", "victim": m["name"],
+                    "rows_deleted": total,
+                    "new_name": _publish_drop(
+                        fs, HPath, table_path, [m["name"]]
+                    ),
+                }
             # write back the batch's ORIGINAL physical columns/types:
             # a delete must never silently widen a batch's schema
             new_df = eval_df.filter(~hit).select(*src.columns)
@@ -3591,7 +3699,7 @@ def _dml_sink(
                 # a SET expression (not its target) references a column
                 # this batch lacks: evaluate over the padded frame --
                 # the missing input is NULL for every row, SQL semantics
-                eval_df = _padded(eval_df)
+                eval_df = _pad_to_schema(eval_df, _sink_schema())
                 new_df = _updated(eval_df)
             # exact updated-row count observed on the WRITE itself: the
             # probe's n_match is a separate evaluation and may disagree
@@ -3603,107 +3711,10 @@ def _dml_sink(
             new_df = new_df.observe(
                 upd_obs, F.sum("__dml_hit").alias("n_hit")
             ).drop("__dml_hit")
-        attempt = f"_data/u-{uuid.uuid4().hex[:8]}"
-        (
-            new_df.repartition("collect_date")
-            .write.mode("overwrite")
-            .partitionBy("collect_date")
-            .parquet(f"{table_path}/{attempt}")
+        return _rewrite_batch(
+            spark, fs, HPath, table_path, m, new_df, total,
+            set_exprs or (), upd_obs,
         )
-        files = sorted(
-            f"{attempt}/{p.getPath().getParent().getName()}/"
-            f"{p.getPath().getName()}"
-            for p in fs.globStatus(
-                HPath(f"{table_path}/{attempt}/collect_date=*/*")
-            )
-            if not p.getPath().getName().startswith(("_", "."))
-        )
-        # rows stat from the WRITTEN layout (footer-only count): with a
-        # non-deterministic predicate the probe count and the rewrite
-        # are SEPARATE evaluations -- the recorded stat must describe
-        # the data actually committed, never the probe's opinion (this
-        # is also why Delta/Iceberg materialize their matched-file
-        # lists); for UPDATE it additionally restores the stat on
-        # pre-stat batches
-        rows_new = (
-            int(
-                spark.read.parquet(f"{table_path}/{attempt}").count()
-            )
-            if files
-            else 0
-        )
-        payload = dict(m)
-        payload.pop("ts", None)
-        victim = payload.pop("name")
-        if set_exprs is None and rows_new == 0:
-            # the write-time evaluation matched every row after all
-            # (possible only under a non-deterministic predicate):
-            # tombstone, exactly the n_match == total path
-            fs.delete(HPath(f"{table_path}/{attempt}"), True)
-            tomb = f"d-{uuid.uuid4().hex[:12]}.json"
-            _publish_manifest(
-                fs, HPath, f"{table_path}/_manifests", tomb,
-                json.dumps(
-                    {"kind": "drop", "supersedes": [victim]},
-                    sort_keys=True,
-                ).encode("utf-8"),
-            )
-            return {"kind": "dropped", "victim": victim,
-                    "rows_deleted": total}
-        payload.update(
-            {
-                "dir": attempt,
-                "files": files,
-                "dates": sorted(
-                    {f.split("collect_date=")[1].split("/")[0] for f in files}
-                ),
-                "rows": rows_new,
-                # the rewrite's ACTUAL schema (an UPDATE may have added
-                # a SET column): the inherited victim schema would go
-                # stale and break metadata-only schema resolution
-                "schema": json.loads(new_df.schema.json()),
-            }
-        )
-        stats = payload.get("stats")
-        if stats is not None:
-            if set_exprs is not None:
-                # updated columns' recorded intervals no longer bound
-                # the data: drop them (stat-less = conservatively
-                # unprunable); a DELETE only narrows, so the old
-                # superset intervals stay prune-safe.  COPY before the
-                # pop -- payload is a shallow copy of the live
-                # manifest, whose nested stats may be shared with the
-                # parsed-snapshot cache (_SNAP_CACHE)
-                payload["stats"] = stats = dict(stats)
-                for c in set_exprs:
-                    stats.pop(c, None)
-            if not stats:
-                payload.pop("stats", None)
-        # bloom sidecar: the new attempt dir starts without one; rebuild
-        # when the victim had one so eq-pruning keeps working (and, for
-        # DELETE, so probes for the deleted keys can skip this batch);
-        # shared builder picks the cheap driver-side arrow path for
-        # small rewrites
-        if rows_new and fs.exists(
-            HPath(f"{table_path}/{m['dir']}/_bloom.json")
-        ):
-            _write_batch_bloom(
-                spark, fs, HPath, table_path, attempt, files,
-                new_df, rows_new,
-            )
-        payload["name"] = victim
-        new_name = _swap_batch_manifest(fs, HPath, table_path, m, payload)
-        return {
-            "kind": "swapped", "victim": victim, "new_name": new_name,
-            "rows_deleted": (
-                total - rows_new if set_exprs is None else 0
-            ),
-            "rows_updated": (
-                int(upd_obs.get.get("n_hit") or 0)
-                if set_exprs is not None
-                else 0
-            ),
-        }
 
     # Batched probe (many candidates): at 10k batches a point predicate
     # leaves ~fpp x N bloom false positives here, and probing each with
@@ -3715,59 +3726,37 @@ def _dml_sink(
     # resolve even against the sink-wide schema (the per-batch path
     # raises the loud sink-wide error).
     pre: "dict[str, int] | None" = None
-    batched_ok = len(cands) > probe_union_min and all(
+    batched_ok = len(cands) > _PROBE_UNION_MIN and all(
         m.get("schema") for m in cands
     )
-    if batched_ok:
-        with _ts_lock:
-            if target_schema is None:
-                target_schema = _sink_merged_schema(
-                    spark, table_path, live
-                )
-        if set_exprs is not None and target_schema is None:
-            # a live batch predates recorded schemas, so the sink-wide
-            # SET validation below cannot run -- and a batched probe
-            # that counts 0 matches everywhere would return a quiet
-            # success for a SET naming a nonexistent column.  Fall back
-            # to per-batch probing, which checks SET columns against
-            # every candidate's real columns and raises loudly.
-            batched_ok = False
     if batched_ok:
         from functools import reduce as _reduce
 
         from pyspark.sql import types as T
 
+        schema = _sink_schema()
         if set_exprs is not None:
             # skipped-clean batches never reach _dml_one's per-batch
             # check, so the sink-wide SET validation must happen here
-            names = {f.name for f in target_schema.fields}
+            names = {f.name for f in schema.fields}
             bad = [c for c in set_exprs if c not in names]
             if bad:
                 raise ValueError(
                     f"SET columns not in sink schema: {bad}"
                 )
         try:
-            pframes = []
-            for m in cands:
-                f = spark.read.schema(
-                    T.StructType.fromJson(m["schema"])
-                ).parquet(f"{table_path}/{m['dir']}")
-                have = set(f.columns)
-                if target_schema is not None:
-                    f = f.select(
-                        "*",
-                        *[
-                            F.lit(None).cast(fl.dataType).alias(fl.name)
-                            for fl in target_schema.fields
-                            if fl.name not in have
-                        ],
-                    )
-                pframes.append(
-                    f.select(
-                        F.lit(m["name"]).alias("__mname"),
-                        hit.cast("long").alias("__h"),
-                    )
+            pframes = [
+                _pad_to_schema(
+                    spark.read.schema(
+                        T.StructType.fromJson(m["schema"])
+                    ).parquet(f"{table_path}/{m['dir']}"),
+                    schema,
+                ).select(
+                    F.lit(m["name"]).alias("__mname"),
+                    hit.cast("long").alias("__h"),
                 )
+                for m in cands
+            ]
             u = _reduce(lambda a, b: a.unionByName(b), pframes)
             pre = {
                 r["__mname"]: int(r["n"] or 0)
@@ -3778,46 +3767,22 @@ def _dml_sink(
         except Exception:
             pre = None  # unresolvable pred/SET: per-batch path reports
 
-    # candidates probe + rewrite CONCURRENTLY (bounded driver pool, the
-    # merge_sink pattern): every batch is an independent job + at most
-    # one fresh-name publish; per-batch atomicity and the re-run resume
-    # contract are unchanged.  Results fold in candidate order so the
-    # summary is deterministic.
+    # only batches the batched probe saw matching (or every candidate
+    # without it) reach _dml_one; the rest are clean
     if pre is not None:
         todo = [m for m in cands if pre.get(m["name"], 0) > 0]
     else:
         todo = cands
-    workers = max(1, min(int(rewrite_parallelism), len(todo) or 1))
-    ran: "dict[str, dict]" = {}
-    if workers > 1 and len(todo) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            for m, rec in zip(
-                todo,
-                pool.map(
-                    lambda m: _dml_one(
-                        m,
-                        pre_match=(
-                            pre.get(m["name"]) if pre is not None else None
-                        ),
-                    ),
-                    todo,
-                ),
-            ):
-                ran[m["name"]] = rec
-    else:
-        for m in todo:
-            ran[m["name"]] = _dml_one(
-                m,
-                pre_match=(
-                    pre.get(m["name"]) if pre is not None else None
-                ),
-            )
-    results = [
-        ran.get(m["name"], {"kind": "clean"}) for m in cands
-    ]
-    for rec in results:
+    recs = _fan_out(
+        spark,
+        lambda m: _dml_one(
+            m, pre_match=None if pre is None else pre[m["name"]]
+        ),
+        todo,
+    )
+    ran = {m["name"]: rec for m, rec in zip(todo, recs)}
+    for m in cands:
+        rec = ran.get(m["name"], {"kind": "clean"})
         if rec["kind"] == "clean":
             out["probed_clean"] += 1
         elif rec["kind"] == "dropped":
@@ -3827,7 +3792,7 @@ def _dml_sink(
             out["rewritten"].append(rec["new_name"])
             out["swapped"][rec["victim"]] = rec["new_name"]
             out["rows_deleted"] += rec["rows_deleted"]
-            out["rows_updated"] += rec["rows_updated"]
+            out["rows_updated"] += rec["hits"].get("n_hit", 0)
     return out
 
 
@@ -3839,8 +3804,6 @@ def delete_sink_where(
     dates: "list[str] | None" = None,
     ranges: "dict[str, tuple[object, object]] | None" = None,
     force: bool = False,
-    rewrite_parallelism: int = 4,
-    probe_union_min: int = 16,
 ) -> dict:
     """Row-level DELETE on a manifest sink (``DELETE FROM t WHERE
     ...``): remove every row matching the predicate, atomically per
@@ -3864,8 +3827,6 @@ def delete_sink_where(
     documented on :func:`_dml_sink`."""
     return _dml_sink(
         spark, table_path, where, eq, dates, ranges, None, force=force,
-        rewrite_parallelism=rewrite_parallelism,
-        probe_union_min=probe_union_min,
     )
 
 
@@ -3878,8 +3839,6 @@ def update_sink_where(
     dates: "list[str] | None" = None,
     ranges: "dict[str, tuple[object, object]] | None" = None,
     force: bool = False,
-    rewrite_parallelism: int = 4,
-    probe_union_min: int = 16,
 ) -> dict:
     """Row-level UPDATE on a manifest sink (``UPDATE t SET col = expr
     WHERE ...``): ``set`` maps column name -> SQL expression, every
@@ -3895,8 +3854,6 @@ def update_sink_where(
         raise ValueError("update_sink_where requires a non-empty set")
     return _dml_sink(
         spark, table_path, where, eq, dates, ranges, set, force=force,
-        rewrite_parallelism=rewrite_parallelism,
-        probe_union_min=probe_union_min,
     )
 
 
@@ -4009,6 +3966,17 @@ def _sink_merged_schema(
     return read_sink(spark, table_path, merge_schema=True).schema
 
 
+# MERGE candidate discovery.  A source with at most _PROBE_KEYS_LIMIT
+# distinct values per ON column is collected and probed through the
+# manifest stats / bloom sidecars like read_sink(eq=...); a larger one
+# scans the date-pruned batches' key columns.  That scan is a
+# per-batch frame union up to _SCAN_UNION_MAX candidates and one flat
+# mapInPandas job over the candidates' files past it, where Catalyst's
+# analysis of an N-child union dominates (SCALE 10h).
+_PROBE_KEYS_LIMIT = 256
+_SCAN_UNION_MAX = 64
+
+
 def merge_sink(
     spark: SparkSession,
     table_path: str,
@@ -4022,10 +3990,7 @@ def merge_sink(
     dates: "list[str] | None" = None,
     store: "StoreConf | None" = None,
     merge_id: "str | None" = None,
-    probe_keys_limit: int = 256,
-    rewrite_parallelism: int = 4,
     force: bool = False,
-    scan_union_max: int = 64,
 ) -> dict:
     """``MERGE INTO`` on a manifest sink -- the third leg of the DML
     triad (:func:`delete_sink_where` / :func:`update_sink_where`
@@ -4074,7 +4039,7 @@ def merge_sink(
        the same reason Delta materializes its merge source;
     2. candidate discovery scans ONLY the key columns of batches the
        manifest stats / bloom sidecars cannot rule out (when the
-       source's distinct key values fit ``probe_keys_limit`` they are
+       source's distinct key values fit ``_PROBE_KEYS_LIMIT`` they are
        collected and probed exactly like ``read_sink(eq=...)``; a
        larger change set falls back to scanning all date-pruned
        batches' key columns -- one column-pruned join, no data columns
@@ -4084,10 +4049,11 @@ def merge_sink(
        fresh supersede manifest (:func:`_swap_batch_manifest` -- the
        identical move the other DML forms use: concurrent readers see
        old rows or new, never half), all-matched DELETEs degrade to
-       zero-IO drop tombstones, stats for SET columns are dropped and
-       bloom sidecars rebuilt; rewrites run CONCURRENTLY
-       (``rewrite_parallelism`` driver threads, each an independent
-       job + fresh-name publish -- per-batch atomicity is unchanged);
+       drop tombstones, stats for SET columns are dropped and
+       bloom sidecars rebuilt (:func:`_rewrite_batch`, shared with the
+       other DML forms); rewrites run CONCURRENTLY (:func:`_fan_out`,
+       each an independent job + fresh-name publish -- per-batch
+       atomicity is unchanged);
     4. inserts append LAST as one ordinary batch whose key derives
        from ``merge_id`` (``epoch="mrg"+md5(merge_id)``), so a re-run
        of the SAME logical merge republish-swaps rather than
@@ -4112,7 +4078,6 @@ def merge_sink(
     pinned-read and erasure-horizon semantics are all shared with
     :func:`_dml_sink`.  Returns a summary dict (batch counts, per-kind
     row counts, the swap map and the insert manifest key)."""
-    import json
     import uuid
     from functools import reduce
 
@@ -4287,7 +4252,7 @@ def merge_sink(
     # --- candidate discovery -------------------------------------------
     cands = _prune_batches(live, dates=dates)
     eq_probe: "dict[str, object] | None" = None
-    if cands and probe_keys_limit > 0:
+    if cands:
         probes: "dict[str, object]" = {}
         for c in on:
             vals = [
@@ -4295,10 +4260,10 @@ def merge_sink(
                 for r in src.select(c)
                 .where(F.col(c).isNotNull())
                 .distinct()
-                .limit(probe_keys_limit + 1)
+                .limit(_PROBE_KEYS_LIMIT + 1)
                 .collect()
             ]
-            if len(vals) > probe_keys_limit:
+            if len(vals) > _PROBE_KEYS_LIMIT:
                 probes = {}
                 break
             probes[c] = vals
@@ -4352,7 +4317,7 @@ def merge_sink(
             return True
 
         scan = None
-        if len(cands) > scan_union_max and all(
+        if len(cands) > _SCAN_UNION_MAX and all(
             _keys_match_target(m) and m.get("files") for m in cands
         ):
             # MANY candidates (a 10k-batch sink puts ~keys x fpp x N
@@ -4460,40 +4425,19 @@ def merge_sink(
         # keys only, deduped: a duplicate source key must not fan a
         # matched target row out into the rewrite
         s_join = src.select(*on).distinct().withColumn(s_hit, F.lit(1))
+    set_cols = [*(set_map or {}), *(bs_set or {})]
+
     def _rewrite_one(name: str) -> dict:
         m = by_name[name]
         t_df = reader.parquet(f"{table_path}/{m['dir']}")
         phys = list(t_df.columns)
-        pad_cols = [c for c in on if c not in phys]
-        for sm in (set_map, bs_set):
-            if sm:
-                pad_cols += [
-                    c
-                    for c in sm
-                    if c not in phys and c not in pad_cols
-                ]
-        if target_schema is not None:
-            # matched_where / not_matched_by_source_where may name ANY
-            # sink-schema column (start_cdc_apply's version guard does
-            # exactly that): pad every column the batch physically
-            # lacks so a pre-widening batch evaluates the predicate
-            # with NULLs -- the documented IS-NULL arm -- instead of
-            # raising UNRESOLVED_COLUMN and wedging the stream
-            pad_cols += [
-                f.name
-                for f in target_schema.fields
-                if f.name not in phys and f.name not in pad_cols
-            ]
-        eval_df = t_df
-        if pad_cols and target_schema is not None:
-            by_field = {f.name: f for f in target_schema.fields}
-            eval_df = t_df.select(
-                "*",
-                *[
-                    F.lit(None).cast(by_field[c].dataType).alias(c)
-                    for c in pad_cols
-                ],
-            )
+        # matched_where / not_matched_by_source_where may name ANY
+        # sink-schema column (start_cdc_apply's version guard does
+        # exactly that): pad every column the batch physically lacks so
+        # a pre-widening batch evaluates the predicate with NULLs -- the
+        # documented IS-NULL arm -- instead of raising UNRESOLVED_COLUMN
+        # and wedging the stream
+        eval_df = _pad_to_schema(t_df, target_schema)
         joined = eval_df.join(s_join, on, "left")
         matched = F.col(s_hit).isNotNull()
         if matched_where is not None:
@@ -4511,47 +4455,26 @@ def merge_sink(
         if when_not_matched_by_source == "delete":
             del_cond = del_cond | unmatched
         kept = joined.filter(~del_cond)
-        cur_set = set_map
-        out_cols = phys + [
-            c
-            for sm in (cur_set, bs_set)
-            for c in (sm or {})
-            if c not in phys
-        ]
         # dedupe while keeping order (a column SET by both clauses)
-        out_cols = list(dict.fromkeys(out_cols))
-        deleting = (
-            when_matched == "delete"
-            or when_not_matched_by_source == "delete"
-        )
+        out_cols = list(dict.fromkeys(phys + set_cols))
         total = int(m["rows"]) if "rows" in m else t_df.count()
         upd_obs = None
-        if cur_set or bs_set:
-            by_field = (
-                {f.name: f for f in target_schema.fields}
-                if target_schema is not None
-                else {}
-            )
+        if set_cols:
 
             def _out_col(c):
-                base = (
-                    F.col(c)
-                    if c in eval_df.columns
-                    else F.lit(None).cast(by_field[c].dataType)
-                )
                 expr = None
-                if cur_set and c in cur_set:
-                    expr = F.when(matched, F.expr(cur_set[c]))
+                if set_map and c in set_map:
+                    expr = F.when(matched, F.expr(set_map[c]))
                 if bs_set and c in bs_set:
                     arm = (expr if expr is not None else F)
                     expr = arm.when(unmatched, F.expr(bs_set[c]))
                 if expr is None:
                     return F.col(c)
-                return expr.otherwise(base).alias(c)
+                return expr.otherwise(F.col(c)).alias(c)
 
             new_df = kept.select(
                 *[_out_col(c) for c in out_cols],
-                (matched if cur_set else F.lit(False))
+                (matched if set_map else F.lit(False))
                 .cast("long")
                 .alias("__dml_hit"),
                 (unmatched if bs_set else F.lit(False))
@@ -4568,140 +4491,35 @@ def merge_sink(
             ).drop("__dml_hit", "__bs_hit")
         else:
             new_df = kept.select(*phys)
-        attempt = f"_data/u-{uuid.uuid4().hex[:8]}"
-        (
-            new_df.repartition("collect_date")
-            .write.mode("overwrite")
-            .partitionBy("collect_date")
-            .parquet(f"{table_path}/{attempt}")
+        # a rewrite that neither removed nor updated a row (a
+        # matched_where miss, or a full-sync pass over a batch whose
+        # rows all matched) comes back clean, never a churned swap
+        return _rewrite_batch(
+            spark, fs, HPath, table_path, m, new_df, total, set_cols,
+            upd_obs,
         )
-        files = sorted(
-            f"{attempt}/{p.getPath().getParent().getName()}/"
-            f"{p.getPath().getName()}"
-            for p in fs.globStatus(
-                HPath(f"{table_path}/{attempt}/collect_date=*/*")
-            )
-            if not p.getPath().getName().startswith(("_", "."))
-        )
-        rows_new = (
-            int(spark.read.parquet(f"{table_path}/{attempt}").count())
-            if files
-            else 0
-        )
-        payload = dict(m)
-        payload.pop("ts", None)
-        victim = payload.pop("name")
-        if deleting and rows_new == 0:
-            # whole batch gone: drop tombstone, reclaim the empty attempt
-            fs.delete(HPath(f"{table_path}/{attempt}"), True)
-            tomb = f"d-{uuid.uuid4().hex[:12]}.json"
-            _publish_manifest(
-                fs, HPath, f"{table_path}/_manifests", tomb,
-                json.dumps(
-                    {"kind": "drop", "supersedes": [victim]},
-                    sort_keys=True,
-                ).encode("utf-8"),
-            )
-            return {"kind": "dropped", "victim": victim,
-                    "rows_deleted": total}
-        n_hit = (
-            int(upd_obs.get.get("n_hit") or 0)
-            if upd_obs is not None
-            else 0
-        )
-        n_bs = (
-            int(upd_obs.get.get("n_bs") or 0)
-            if upd_obs is not None
-            else 0
-        )
-        if rows_new == total and n_hit == 0 and n_bs == 0:
-            # nothing deleted (counts equal) and nothing updated (zero
-            # hits -- a matched_where miss, or a full-sync pass over a
-            # batch whose rows all matched): the rewrite is
-            # byte-equivalent, publishing a swap would only churn
-            # manifests -- leave the batch untouched
-            fs.delete(HPath(f"{table_path}/{attempt}"), True)
-            return {"kind": "clean"}
-        payload.update(
-            {
-                "dir": attempt,
-                "files": files,
-                "dates": sorted(
-                    {
-                        f.split("collect_date=")[1].split("/")[0]
-                        for f in files
-                    }
-                ),
-                "rows": rows_new,
-                # the rewrite's ACTUAL schema (update may add a SET
-                # column) -- keeps _sink_merged_schema truthful
-                "schema": json.loads(new_df.schema.json()),
-            }
-        )
-        stats = payload.get("stats")
-        if stats is not None and (cur_set or bs_set):
-            # copy before the pop: payload shallow-copies the live
-            # manifest, whose nested stats may be shared with the
-            # parsed-snapshot cache (_SNAP_CACHE)
-            payload["stats"] = stats = dict(stats)
-            for sm in (cur_set, bs_set):
-                for c in sm or {}:
-                    stats.pop(c, None)
-            if not stats:
-                payload.pop("stats", None)
-        if rows_new and fs.exists(
-            HPath(f"{table_path}/{m['dir']}/_bloom.json")
-        ):
-            _write_batch_bloom(
-                spark, fs, HPath, table_path, attempt, files,
-                new_df, rows_new,
-            )
-        payload["name"] = victim
-        new_name = _swap_batch_manifest(fs, HPath, table_path, m, payload)
-        return {
-            "kind": "swapped", "victim": victim, "new_name": new_name,
-            "rows_deleted": total - rows_new, "n_hit": n_hit,
-            "n_bs": n_bs,
-        }
 
-    # touched batches rewrite CONCURRENTLY (bounded pool): every swap is
-    # an independent job + one fresh-name manifest publish, so threads
-    # never contend on an object; atomicity stays PER BATCH -- a failure
-    # aborts the statement with every already-published swap committed
-    # and the rest untouched, the same resume contract as the serial
-    # form (re-run the statement).  Fold results in deterministic name
-    # order so the summary is stable regardless of completion order.
+    # touched batches rewrite CONCURRENTLY (_fan_out), folded in
+    # deterministic name order so the summary is stable regardless of
+    # completion order
     todo = sorted(rewrite)
-    results: "dict[str, dict]" = {}
-    workers = max(1, min(int(rewrite_parallelism), len(todo) or 1))
-    if workers > 1 and len(todo) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            for name, rec in zip(todo, pool.map(_rewrite_one, todo)):
-                results[name] = rec
-    else:
-        for name in todo:
-            results[name] = _rewrite_one(name)
-    for name in todo:
-        rec = results[name]
+    for rec in _fan_out(spark, _rewrite_one, todo):
         if rec["kind"] == "dropped":
             out["dropped"].append(rec["victim"])
             out["rows_deleted"] += rec["rows_deleted"]
             out["touched_batches"] += 1
         elif rec["kind"] == "clean":
-            # byte-equivalent rewrite skipped (matched_where miss, or a
-            # full-sync pass over an all-matched batch): its OWN
-            # counter -- probed_clean stays the discovery metric, so
-            # the two can never double-count one batch
+            # byte-equivalent rewrite skipped: its OWN counter --
+            # probed_clean stays the discovery metric, so the two can
+            # never double-count one batch
             out["unchanged_batches"] += 1
         else:
             out["rewritten"].append(rec["new_name"])
             out["swapped"][rec["victim"]] = rec["new_name"]
             out["touched_batches"] += 1
             out["rows_deleted"] += rec["rows_deleted"]
-            out["rows_updated"] += rec["n_hit"]
-            out["rows_updated_by_source"] += rec["n_bs"]
+            out["rows_updated"] += rec["hits"].get("n_hit", 0)
+            out["rows_updated_by_source"] += rec["hits"].get("n_bs", 0)
 
     # --- insert (last, so a crash mid-rewrite never half-inserts) -------
     if when_not_matched == "insert":

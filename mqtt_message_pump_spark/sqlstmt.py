@@ -1226,8 +1226,6 @@ def execute_sql(
     store=None,
     merge_id: "str | None" = None,
     force: bool = False,
-    rewrite_parallelism: int = 4,
-    probe_keys_limit: int = 256,
     batch_id: "int | None" = None,
     epoch: "str | None" = None,
 ) -> "dict | DataFrame":
@@ -1263,7 +1261,7 @@ def execute_sql(
         eq, dates, ranges, where = _extract_hints(p["where"])
         out = delete_sink_where(
             spark, path, where=where, eq=eq, dates=dates, ranges=ranges,
-            force=force, rewrite_parallelism=rewrite_parallelism,
+            force=force,
         )
         out["statement"] = "delete"
         return out
@@ -1276,7 +1274,6 @@ def execute_sql(
         out = update_sink_where(
             spark, path, set=p["set"], where=where, eq=eq, dates=dates,
             ranges=ranges, force=force,
-            rewrite_parallelism=rewrite_parallelism,
         )
         out["statement"] = "update"
         return out
@@ -1295,8 +1292,7 @@ def execute_sql(
         p = _parse_merge(sql, masked)
         return _execute_merge(
             spark, p, tables, store=store, merge_id=merge_id,
-            force=force, rewrite_parallelism=rewrite_parallelism,
-            probe_keys_limit=probe_keys_limit,
+            force=force,
         )
     if verb == "VACUUM":
         p = _parse_vacuum(sql, masked)
@@ -1322,10 +1318,7 @@ def execute_sql(
     )
 
 
-def _execute_merge(
-    spark, p, tables, store, merge_id, force, rewrite_parallelism,
-    probe_keys_limit,
-) -> dict:
+def _execute_merge(spark, p, tables, store, merge_id, force) -> dict:
     from mqtt_message_pump_spark.sinks import merge_sink
 
     path = _resolve_table(spark, p["target"], tables)
@@ -1406,9 +1399,7 @@ def _execute_merge(
                 kw["not_matched_by_source_where"] = c["pred"]
     out = merge_sink(
         spark, path, src, on=on, dates=dates, store=store,
-        merge_id=merge_id, force=force,
-        rewrite_parallelism=rewrite_parallelism,
-        probe_keys_limit=probe_keys_limit, **kw,
+        merge_id=merge_id, force=force, **kw,
     )
     out["statement"] = "merge"
     return out

@@ -571,7 +571,6 @@ def start_cdc_apply(
     drop_cols: "list[str] | None" = None,
     trigger_secs: float = 1.0,
     store=None,
-    probe_keys_limit: int = 256,
 ):
     """Apply a STREAM of change rows to a manifest sink as per-batch
     MERGEs (the Delta streaming-merge / CDC-apply idiom): each
@@ -696,7 +695,7 @@ def start_cdc_apply(
                     when_matched="delete", matched_where=guard,
                     when_not_matched=None,
                     merge_id=f"cdc-{epoch}-{batch_id}-d",
-                    store=store, probe_keys_limit=probe_keys_limit,
+                    store=store,
                 )
         else:
             ups = latest
@@ -707,7 +706,7 @@ def start_cdc_apply(
             when_matched="update", matched_where=guard,
             when_not_matched="insert",
             merge_id=f"cdc-{epoch}-{batch_id}-u",
-            store=store, probe_keys_limit=probe_keys_limit,
+            store=store,
         )
 
     return (

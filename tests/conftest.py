@@ -50,8 +50,7 @@ SLOW_TIER: list[tuple[str, str | None, str | None]] = [
     ("test_round13_ops.py", None, "test_topic_prefix_pushdown_prunes_batches"),  # 68 s
     ("test_round12_ops.py", "TestReindexIvfPq", None),  # 104 s
     ("test_round12_ops.py", "TestSinkTailSource", None),  # 83 s
-    # many-row DML / scan / manifest stress sweeps
-    ("test_round13_dml.py", "TestBatchedProbe", None),  # 87 s
+    # many-row scan / manifest stress sweeps
     ("test_flat_scan.py", "TestFlatScanEquivalence", None),  # 45 s + 39 s setup
     ("test_manifest_commit.py", None, "test_manifest_level_date_pruning"),  # 44 s
     # long streaming-equivalence soaks (their fast twins remain)

@@ -20,6 +20,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mqtt_message_pump_spark import sinks as S
 from mqtt_message_pump_spark.config import StoreConf
 from mqtt_message_pump_spark.sinks import (
     WriterFenced,
@@ -598,10 +599,11 @@ class TestMergeScopeAndFallback:
         assert read_sink(spark, tp).filter("mid = 'mB'").count() == 2
 
     def test_scan_discovery_fallback_matches_probe_path(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
-        """probe_keys_limit=0 forces the full key-column scan discovery;
+        """_PROBE_KEYS_LIMIT=0 forces the full key-column scan discovery;
         results must equal the bloom-probe path bit for bit."""
+        monkeypatch.setattr(S, "_PROBE_KEYS_LIMIT", 0)
         tp = _mk_sink(spark, tmp_path)
         src = _frame(
             spark,
@@ -611,7 +613,7 @@ class TestMergeScopeAndFallback:
             ],
         )
         res = merge_sink(
-            spark, tp, src, on=["mid"], probe_keys_limit=0,
+            spark, tp, src, on=["mid"],
             merge_id="scan",
         )
         assert res["candidate_batches"] == 3  # nothing pruned
@@ -843,11 +845,11 @@ class TestClausePredicatesOnMissingColumns:
 
 
 class TestDistributedKeyScan:
-    """The flat mapInPandas discovery path (scan_union_max exceeded):
+    """The flat mapInPandas discovery path (_SCAN_UNION_MAX exceeded):
     identical matched/touched results to the per-frame union, engaged
     automatically at high candidate counts."""
 
-    def test_parity_with_union_path(self, spark, tmp_path):
+    def test_parity_with_union_path(self, spark, tmp_path, monkeypatch):
         u_tp = _mk_sink(spark, tmp_path / "u")
         d_tp = _mk_sink(spark, tmp_path / "d")
         src = _frame(
@@ -858,13 +860,15 @@ class TestDistributedKeyScan:
                 ("mNEW9", "t/new", "INS", "2024-01-03 00:00:00"),
             ],
         )
+        # force the union path
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 10_000)
         ref = merge_sink(
             spark, u_tp, src, on=["mid"], merge_id="dks-1",
-            scan_union_max=10_000,  # force the union path
         )
+        # force the distributed file scan
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 0)
         res = merge_sink(
             spark, d_tp, src, on=["mid"], merge_id="dks-1",
-            scan_union_max=0,  # force the distributed file scan
         )
         for k in (
             "candidate_batches", "touched_batches", "rows_updated",
@@ -873,9 +877,10 @@ class TestDistributedKeyScan:
             assert res[k] == ref[k], k
         assert _rows(spark, d_tp) == _rows(spark, u_tp)
 
-    def test_timestamp_key_roundtrip(self, spark, tmp_path):
+    def test_timestamp_key_roundtrip(self, spark, tmp_path, monkeypatch):
         """Non-string key types survive the pyarrow->pandas->Arrow
         round trip: merge ON (mid, collect_datetime)."""
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 0)
         tp = _mk_sink(spark, tmp_path / "s", n_batches=2, per=4)
         row = read_sink(spark, tp).filter("mid = 'm0102'").collect()[0]
         src = spark.createDataFrame(
@@ -884,17 +889,20 @@ class TestDistributedKeyScan:
         ).withColumn("collect_date", F.lit(row["collect_date"]))
         res = merge_sink(
             spark, tp, src, on=["mid", "collect_datetime"],
-            when_not_matched=None, scan_union_max=0,
+            when_not_matched=None,
         )
         assert res["rows_updated"] == 1
         got = read_sink(spark, tp).filter("mid = 'm0102'").collect()[0]
         assert got["payload"] == "TS-UPD"
 
-    def test_widened_key_falls_back_to_union(self, spark, tmp_path):
+    def test_widened_key_falls_back_to_union(
+        self, spark, tmp_path, monkeypatch
+    ):
         """A batch whose recorded key TYPE mismatches the widened
         target (int recorded, long after widening) keeps the per-frame
         union path -- eligibility is metadata-checked, so the flat
         scan can never hit a type surprise at task time."""
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 0)
         tp = str(tmp_path / "s")
         old = spark.createDataFrame(
             [(1, "p1")], "k int, payload string"
@@ -909,7 +917,6 @@ class TestDistributedKeyScan:
         ).withColumn("collect_date", F.to_date(F.lit("2024-01-05")))
         res = merge_sink(
             spark, tp, src, on=["k"], when_not_matched=None,
-            scan_union_max=0,
         )
         assert res["rows_updated"] == 1
         got = {
@@ -919,11 +926,12 @@ class TestDistributedKeyScan:
         assert got[1] == "UPD" and got[2**40] == "p2"
 
     def test_partition_column_as_merge_key_flat_path(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         """Regression (review): collect_date lives in the PATH, not
         the parquet files -- the flat scan must reattach it or every
         file would be skipped and matched rows silently re-inserted."""
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 0)
         tp = _mk_sink(spark, tmp_path / "s", n_batches=2, per=4)
         row = read_sink(spark, tp).filter("mid = 'm0101'").collect()[0]
         src = _frame(
@@ -933,7 +941,6 @@ class TestDistributedKeyScan:
         )
         res = merge_sink(
             spark, tp, src, on=["mid", "collect_date"],
-            scan_union_max=0,
         )
         assert res["rows_updated"] == 1
         assert res["rows_inserted"] == 0  # matched, never duplicated
@@ -942,10 +949,13 @@ class TestDistributedKeyScan:
             == 1
         )
 
-    def test_big_int_key_with_nulls_stays_exact(self, spark, tmp_path):
+    def test_big_int_key_with_nulls_stays_exact(
+        self, spark, tmp_path, monkeypatch
+    ):
         """Regression (review): a nullable int64 key column must not
         round through float64 (keys above 2^53 would corrupt) -- nulls
         are dropped in Arrow before the pandas hop."""
+        monkeypatch.setattr(S, "_SCAN_UNION_MAX", 0)
         tp = str(tmp_path / "s")
         big = 2**60 + 1
         df = spark.createDataFrame(
@@ -958,7 +968,6 @@ class TestDistributedKeyScan:
         ).withColumn("collect_date", F.to_date(F.lit("2024-01-01")))
         res = merge_sink(
             spark, tp, src, on=["k"], when_not_matched=None,
-            scan_union_max=0,
         )
         assert res["rows_updated"] == 1
         got = {

@@ -1065,7 +1065,7 @@ class TestBatchedProbe:
 
 class TestBatchedProbePadRegression:
     def test_set_on_missing_column_with_resolvable_pred(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         """Regression (review): under the batched probe, an UPDATE
         whose predicate RESOLVES on a pre-widening batch but whose SET
@@ -1092,8 +1092,9 @@ class TestBatchedProbePadRegression:
             "mid = 'k-legacy'"
         ).collect()[0]
         assert got["topic"] == "FIXED"
-        # and the probe threshold is callable-controllable
+        # and under the batched probe at any candidate count
+        monkeypatch.setattr(S, "_PROBE_UNION_MIN", 0)
         res2 = delete_sink_where(
-            spark, tp, where="payload = 'p101'", probe_union_min=0,
+            spark, tp, where="payload = 'p101'",
         )
         assert res2["rows_deleted"] == 1

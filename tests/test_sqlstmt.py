@@ -1076,9 +1076,11 @@ class TestBatchedProbeSetValidation:
     predates recorded schemas while every CANDIDATE has one."""
 
     def test_bad_set_column_raises_with_prerecorded_batch(
-        self, spark, tmp_path
+        self, spark, tmp_path, monkeypatch
     ):
         import json
+
+        from mqtt_message_pump_spark import sinks
 
         tp = _mk_sink(spark, tmp_path / "s", n_batches=3, per=4)
         # age ONE batch back to the pre-recorded-schema era (local FS
@@ -1090,10 +1092,11 @@ class TestBatchedProbeSetValidation:
         crc = victim.parent / f".{victim.name}.crc"
         if crc.exists():
             crc.unlink()  # Hadoop LocalFS checksum sidecar
+        monkeypatch.setattr(sinks, "_PROBE_UNION_MIN", 1)
         with pytest.raises(ValueError, match="SET columns"):
             update_sink_where(
                 spark, tp, set={"nope_col": "'x'"},
-                where="true", probe_union_min=1,
+                where="true",
             )
 
 

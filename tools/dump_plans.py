@@ -5,10 +5,17 @@ filters, pruned read schema, join strategies, exchange count, codegen
 spans).  Run after changing any plan-shaping code:
 
     python tools/dump_plans.py
+
+With ``--out-dir`` it instead writes one ``<query>_<tag>.txt`` per query
+(default: the bench.py headline slots) for a before/after evidence
+trail, printing each plan's Exchange count:
+
+    python tools/dump_plans.py --out-dir plans/r17 --tag before [key ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
@@ -201,8 +208,45 @@ _ABBREV = {
 }
 
 
+def dump_per_query(spark, out_dir: str, tag: str, keys: list[str]) -> None:
+    """One ``explain("formatted")`` file per query under ``out_dir``."""
+    if not keys:
+        import bench
+
+        keys = [k for k in bench.HEADLINE if k != "pump_batch"]
+    os.makedirs(out_dir, exist_ok=True)
+    for key in keys:
+        plan = plan_of(QUERIES[key](spark, SF_DIR))
+        path = os.path.join(out_dir, f"{key}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"{key}: {path} (Exchange x{plan.count('Exchange')})")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Dump headline physical plans: docs/PLANS.md, or one "
+        "file per query with --out-dir (scale factor dir from "
+        "SPARK_GRAFT_SF_DIR)."
+    )
+    ap.add_argument(
+        "--out-dir",
+        help="write <query>_<tag>.txt per query here instead of "
+        "regenerating docs/PLANS.md",
+    )
+    ap.add_argument(
+        "--tag", default="before", help="file-name tag (before/after)"
+    )
+    ap.add_argument(
+        "keys", nargs="*", help="queries to dump with --out-dir"
+    )
+    args = ap.parse_args()
+    if args.keys and not args.out_dir:
+        ap.error("query keys need --out-dir")
     spark = get_spark(app_name="dump-plans")
+    if args.out_dir:
+        dump_per_query(spark, args.out_dir, args.tag, args.keys)
+        return
     lines = [
         "# Physical plans (generated by tools/dump_plans.py -- do not edit)",
         "",

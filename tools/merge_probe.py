@@ -15,7 +15,7 @@ Reported:
   (expect exactly 10), wall;
 - the idempotent re-run under the same merge_id (expect inserted=0,
   the previously-inserted batch now matched);
-- a change set larger than probe_keys_limit: discovery degrades to ONE
+- a change set larger than sinks._PROBE_KEYS_LIMIT: discovery degrades to ONE
   key-column scan-join over the date-pruned batches -- wall is the
   full-scan floor every stat-less MERGE pays;
 - insert-only MERGE (dedup-append): no rewrites ever, one anti-join +
@@ -136,7 +136,7 @@ def main() -> None:
         flush=True,
     )
 
-    # change set past probe_keys_limit: ONE key-column scan discovery
+    # change set past sinks._PROBE_KEYS_LIMIT: ONE key-column scan discovery
     big = big_upd + [f"zzz-big-{i}" for i in range(500)]
     res, _ = _timed(
         "MERGE 510-key change set (scan discovery)",
