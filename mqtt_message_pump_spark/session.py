@@ -6,13 +6,54 @@ survive a 1000x scale-up: AQE on (runtime coalesce + skew-join handling),
 shuffle partitions sized to cores locally (overridable for a cluster),
 Arrow transfer on for the Pandas-UDF slow path, UTC session time zone so
 timestamp semantics are stable across engines.
+
+The ``file://`` scheme is served by ``jvm/NioLocalFileSystem.java`` (built
+into ``jvm/localfs.jar`` by ``tools/build_localfs_jar.py``): without
+libhadoop, Hadoop's stock local filesystem spawns a ``chmod``, ``readlink``
+or ``ls`` process for file metadata, several per checkpoint and sink file.
+The replacement does those calls through ``java.nio.file`` and keeps the
+stock ``.crc`` checksum layer.  Other schemes are untouched.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "localfs.jar")
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "mqtt_message_pump_spark.jvm.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "mqtt_message_pump_spark.jvm.NioLocalFileSystem$Fs",
+}
+# share of physical memory the local-mode JVM heap may grow to; the rest
+# stays for Python workers, the page cache and the OS
+DRIVER_MEMORY_FRACTION = 0.5
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for this host: a fixed share of physical RAM."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{int(phys * DRIVER_MEMORY_FRACTION) >> 20}m"
+
+
+def _localfs_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """``extra_conf`` plus the ``file://`` binding, with the jar appended to
+    the caller's driver and executor class paths.
+
+    A JVM started earlier without the jar (a caller's own session) cannot
+    load the classes, so it keeps the stock filesystem."""
+    jvm = SparkContext._jvm
+    if jvm is not None and not jvm.org.apache.spark.util.Utils.classIsLoadable(
+        LOCALFS_CONF["spark.hadoop.fs.file.impl"]
+    ):
+        return extra_conf
+    conf = {**LOCALFS_CONF, **extra_conf}
+    for key in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+        conf[key] = os.pathsep.join(filter(None, (extra_conf.get(key), LOCALFS_JAR)))
+    return conf
 
 
 def get_spark(
@@ -60,7 +101,10 @@ def get_spark(
         .config("spark.cleaner.referenceTracking.blocking", "false")
         # local mode = driver-only JVM: all executor threads share this
         # heap, so size it like a worker, not a coordinator
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         # long sessions compile hundreds of whole-stage-codegen classes;
         # the JVM default 240m code cache fills, JIT starts flushing hot
         # methods, and expression-heavy stages fall back to interpreted
@@ -71,7 +115,7 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _localfs_conf(extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
