@@ -68,7 +68,6 @@ class StoreConf:
     database: str = "default"
     raw_table_name: str = "Raw_Message"
     adapter_table_name: str = "Json_Message"
-    compress: bool = True
     # Replay-idempotent batch-commit protocol for parquet sinks:
     # ``rename`` (default) moves staged files into place under a batch
     # prefix -- correct where rename is atomic (local FS, HDFS);
@@ -342,7 +341,7 @@ def load_config(path: str) -> PumpConfig:
         items = sections["clickhouse"]
         store = cfg.store
         store.format = "jdbc"
-        for k in ("database", "compress", "username", "password"):
+        for k in ("database", "username", "password"):
             if k in items:
                 _set_typed(store, k, items[k])
         if "replacingengine" in items:  # this repo's extension (replay

@@ -99,10 +99,6 @@ def fingerprint(text: Column, prime: int = FINGERPRINT_PRIME) -> Column:
     )
 
 
-def _sql_list(words: tuple[str, ...]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
-
-
 # DuckDB twins (format with {text} = column name) -------------------------
 
 SQL_TOKEN_COUNT = "len(string_split({text}, ' '))"

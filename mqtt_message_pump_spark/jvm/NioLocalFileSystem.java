@@ -8,11 +8,14 @@ import java.nio.file.Files;
 import java.nio.file.NoSuchFileException;
 import java.nio.file.attribute.GroupPrincipal;
 import java.nio.file.attribute.UserPrincipal;
+import java.util.Collections;
 import java.util.Map;
+import java.util.concurrent.CompletableFuture;
 
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.ChecksumFs;
 import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FSLinkResolver;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FsConstants;
@@ -20,8 +23,11 @@ import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
 import org.apache.hadoop.fs.Path;
 import org.apache.hadoop.fs.RawLocalFileSystem;
+import org.apache.hadoop.fs.impl.AbstractFSBuilderImpl;
+import org.apache.hadoop.fs.impl.OpenFileParameters;
 import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
+import org.apache.hadoop.util.LambdaUtils;
 
 /**
  * Hadoop's local filesystem without a process spawn per metadata call.
@@ -112,10 +118,28 @@ public class NioLocalFileSystem extends LocalFileSystem {
     }
   }
 
-  /** The FileContext binding, as {@code LocalFs}: checksums over {@link RawFs}. */
+  /**
+   * The FileContext binding, as {@code LocalFs}: checksums over {@link RawFs}.
+   * Unlike {@code LocalFs} it checks every read: {@code FilterFs} sends
+   * {@code open(Path)} and {@code openFileWithOptions} past the checksum layer.
+   */
   public static class Fs extends ChecksumFs {
     public Fs(URI uri, Configuration conf) throws IOException, URISyntaxException {
       super(new RawFs(conf));
+    }
+
+    @Override
+    public FSDataInputStream open(Path f) throws IOException {
+      return open(f, getServerDefaults(f).getFileBufferSize());
+    }
+
+    @Override
+    public CompletableFuture<FSDataInputStream> openFileWithOptions(
+        Path path, OpenFileParameters parameters) throws IOException {
+      AbstractFSBuilderImpl.rejectUnknownMandatoryKeys(
+          parameters.getMandatoryKeys(), Collections.emptySet(), "for " + path);
+      return LambdaUtils.eval(
+          new CompletableFuture<>(), () -> open(path, parameters.getBufferSize()));
     }
   }
 

@@ -30,6 +30,9 @@ from pyspark.sql import types as T
 # Mersenne prime 2^31-1: the classic universal-hash modulus; coefficients
 # below are small odd constants so both engines compute identical int64 math.
 MINHASH_PRIME = 2147483647
+# doubled-edge count up to which connected_components resolves labels by
+# a union-find on the driver instead of distributed propagation rounds
+DRIVER_THRESHOLD_EDGES = 500_000
 
 
 def md5_hash32(col: Column) -> Column:
@@ -105,35 +108,6 @@ def minhash_signatures(
             )
         )
     return hashed.groupBy(id_col).agg(*aggs)
-
-
-def lsh_band_buckets(
-    df: DataFrame, num_hashes: int, bands: int, id_col: str
-) -> DataFrame:
-    """Assign each row to `bands` LSH buckets (rows-per-band =
-    num_hashes/bands).  Returns (id, band, bucket) -- the shuffle key for
-    candidate generation is (band, bucket), never the document."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands "
-            f"({bands}); trailing hash columns would be silently dropped, "
-            "weakening the banding guarantee"
-        )
-    rows = num_hashes // bands
-    out = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{b * rows + r}") for r in range(rows)]
-        out.append(
-            df.select(
-                F.col(id_col),
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[c.cast("string") for c in cols]).alias("bucket"),
-            )
-        )
-    res = out[0]
-    for o in out[1:]:
-        res = res.unionByName(o)
-    return res
 
 
 def _cap_buckets(
@@ -633,10 +607,6 @@ def with_simhash(
     return df.join(simhash_signatures(df, id_col, text_col, bits, hash32), id_col, "left")
 
 
-def hamming_distance(a: Column, b: Column, bits: int = 16) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def exact_dedup(
     df: DataFrame, dedup_cols: list[str], id_col: str
 ) -> DataFrame:
@@ -692,7 +662,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 50,
-    driver_threshold_edges: int = 500_000,
 ) -> DataFrame:
     """Connected components by min-label propagation (the dedup-grouping
     step: every doc in a near-dup cluster gets the cluster's minimum id).
@@ -714,7 +683,7 @@ def connected_components(
     than the corpus -- the quadratic blowup lives in the buckets, and the
     capped candidate generators bound it (``minhash_candidate_pairs``
     ``max_bucket_size``).  When the undirected edge list is at most
-    ``driver_threshold_edges // 2`` rows (default 500k doubled, i.e.
+    ``DRIVER_THRESHOLD_EDGES // 2`` rows (500k doubled, i.e.
     250k undirected edges -- bounding the driver collect itself, the
     quantity that can OOM), a single-pass union-find on the driver
     replaces O(diameter) scheduled rounds.  r15: the probe is ONE
@@ -725,8 +694,8 @@ def connected_components(
     This is NOT a collect of the corpus -- vertices never leave the
     cluster; only the (already materialized) edge list does, under an
     explicit cap, exactly like a broadcast-hash-join side.  Above the
-    cap the distributed propagation runs unchanged.  Pass
-    ``driver_threshold_edges=0`` to force the distributed path.
+    cap the distributed propagation runs unchanged; a threshold of 0
+    forces it.
     """
     # Driver fast path, ONE job (r15): collect the UNDIRECTED edge list
     # directly under a limit of cap+1 rows -- union-find needs no doubled
@@ -738,11 +707,10 @@ def connected_components(
     # doubled-edge threshold did (threshold/2 undirected edges == the
     # same cap); if the limit row count exceeds the cap the graph is too
     # big and the distributed propagation below runs unchanged.
-    # Gate BEFORE collecting: threshold 0 genuinely forces the
-    # distributed path (an empty edge list must not sneak onto the
-    # driver path when the caller asked for distributed; ADVICE r9).
-    cap_undirected = driver_threshold_edges // 2
-    if driver_threshold_edges:
+    # Gate BEFORE collecting: a threshold of 0 forces the distributed
+    # path even for an empty edge list (ADVICE r9).
+    cap_undirected = DRIVER_THRESHOLD_EDGES // 2
+    if DRIVER_THRESHOLD_EDGES:
         head = (
             edges.select(
                 F.col(src_col).alias("src"), F.col(dst_col).alias("dst")

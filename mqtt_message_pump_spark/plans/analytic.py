@@ -125,14 +125,14 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = supp.join(
         F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
     ).join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    joined.createOrReplaceTempView("__gs_supplier")
     return spark.sql(
         """
         SELECT r_name, n_name, COUNT(*) AS n,
                SUM(CAST(s_acctbal AS DECIMAL(18,2))) AS total_bal
-        FROM __gs_supplier
+        FROM {joined}
         GROUP BY GROUPING SETS ((r_name), (n_name))
-        """
+        """,
+        joined=joined,
     )
 
 
@@ -909,16 +909,16 @@ def q_corr_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer mean (verified at sf0.01/0.1), so reduction-order noise
     cannot flip the predicate."""
     orders = table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("__corr_orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey,
                CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        FROM __corr_orders o
+        FROM {orders} o
         WHERE o_totalprice > 2 * (
-          SELECT AVG(o_totalprice) FROM __corr_orders i
+          SELECT AVG(o_totalprice) FROM {orders} i
           WHERE i.o_custkey = o.o_custkey)
-        """
+        """,
+        orders=orders,
     )
 
 
@@ -1171,26 +1171,30 @@ def q_sql_insert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the pure relational end state: the replay contributes its
     second attempt exactly once."""
     import tempfile
+    import uuid
 
     from mqtt_message_pump_spark.sinks import read_sink
     from mqtt_message_pump_spark.sqlstmt import execute_sql
 
     tp = tempfile.mkdtemp(prefix="sqlins_") + "/sink"
-    table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__sqlins_docs"
-    )
-    execute_sql(
-        spark,
-        f"""
-        INSERT INTO `{tp}` (mid, topic, payload, collect_datetime)
-        SELECT concat('d-', CAST(doc_id AS STRING)),
-               concat('t/', lang),
-               CAST(n_chars AS STRING),
-               timestamp'2024-03-01 00:00:00'
-                 + make_interval(0, 0, 0, 0, 0, 0, doc_id % 86400)
-        FROM __sqlins_docs WHERE doc_id % 5 = 0
-        """,
-    )
+    # a one-shot name, dropped once the INSERT has run
+    docs = f"__sqlins_docs_{uuid.uuid4().hex[:8]}"
+    table(spark, sf_dir, "documents").createOrReplaceTempView(docs)
+    try:
+        execute_sql(
+            spark,
+            f"""
+            INSERT INTO `{tp}` (mid, topic, payload, collect_datetime)
+            SELECT concat('d-', CAST(doc_id AS STRING)),
+                   concat('t/', lang),
+                   CAST(n_chars AS STRING),
+                   timestamp'2024-03-01 00:00:00'
+                     + make_interval(0, 0, 0, 0, 0, 0, doc_id % 86400)
+            FROM {docs} WHERE doc_id % 5 = 0
+            """,
+        )
+    finally:
+        spark.catalog.dropTempView(docs)
     execute_sql(
         spark,
         f"INSERT INTO `{tp}` VALUES "

@@ -26,6 +26,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mqtt_message_pump_spark.session import ensure_session, plan_in_clone, rebind
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -107,10 +109,11 @@ def query(
 # integer division -- truncation toward zero matches DuckDB's
 # TIMESTAMP_NS -> TIMESTAMP cast for positive epochs.  Other fixture
 # generations write TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4
-# would infer as TIMESTAMP_NTZ; ``table()`` disables that inference so the
-# column lands as plain TIMESTAMP in the pinned-UTC session (identical
-# wall-clock semantics to DuckDB's naive read) and every downstream
-# ``unix_micros`` / window expression sees one stable type either way.
+# would infer as TIMESTAMP_NTZ; ``session.SESSION_CONF`` disables that
+# inference (and enables the nanos read) so the column lands as plain
+# TIMESTAMP in the pinned-UTC session (identical wall-clock semantics to
+# DuckDB's naive read) and every downstream ``unix_micros`` / window
+# expression sees one stable type either way.
 _NANOS_TS_COLS = {"events": ["ts"]}
 
 # Catalog-style plan memo (r15): the UNMATERIALIZED base DataFrame per
@@ -132,31 +135,30 @@ def materialize_once(df: DataFrame) -> DataFrame:
     execution and are freed with the DataFrame, so a fresh call computes
     from the parquet input every time — nothing persists across runs.
 
-    Why the AQE flip: under AQE, ``Dataset.localCheckpoint`` records the
-    AdaptiveSparkPlan's output partitioning as Unknown in the LogicalRDD,
-    so every downstream keyed consumer re-plans an ENSURE_REQUIREMENTS
-    exchange over blocks that are already correctly hash-partitioned.
-    Compiling the checkpoint with AQE off records the real
-    hashpartitioning (verified: ``groupBy`` over the checkpointed frame
-    then plans ZERO exchanges); the flag is restored immediately, so
-    consumers still plan adaptively.  The checkpointed subtrees here are
-    scan → fixed-N repartition → narrow ops, where AQE had nothing to
-    adapt anyway.
+    Why AQE is off in a session clone: under AQE,
+    ``Dataset.localCheckpoint`` records the AdaptiveSparkPlan's output
+    partitioning as Unknown in the LogicalRDD, so every downstream keyed
+    consumer re-plans an ENSURE_REQUIREMENTS exchange over blocks that are
+    already correctly hash-partitioned.  Compiling the checkpoint with AQE
+    off records the real hashpartitioning (verified: ``groupBy`` over the
+    checkpointed frame then plans ZERO exchanges); the caller's session
+    keeps AQE on, so consumers still plan adaptively.  The checkpointed
+    subtrees here are scan → fixed-N repartition → narrow ops, where AQE
+    had nothing to adapt anyway.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return plan_in_clone(
+        df.sparkSession,
+        {"spark.sql.adaptive.enabled": "false"},
+        lambda clone: rebind(df, clone).localCheckpoint(eager=False),
+    )
 
 
 def table(
     spark: SparkSession, sf_dir: str, name: str, split: bool | str = False
 ) -> DataFrame:
-    """Load one fixture table.  Pins the session time zone to UTC so naive
-    parquet timestamps mean the same instant in Spark and DuckDB.
+    """Load one fixture table under the engine's session settings
+    (:func:`session.ensure_session`: UTC, so naive parquet timestamps
+    mean the same instant in Spark and DuckDB).
 
     ``split=True`` round-robin-repartitions the scan to the session's
     default parallelism.  Use it for compute-dense per-row work (minhash /
@@ -179,9 +181,7 @@ def table(
     sort-before-repartition pass.  Results are identical either way --
     only the partitioning changes.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    ensure_session(spark)
     key = (spark.sparkContext.applicationId, sf_dir, name)
     df = _TABLE_PLANS.get(key)
     if df is None:

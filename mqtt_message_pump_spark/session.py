@@ -4,8 +4,11 @@ Local testing runs a single JVM (``local[N]``); production targets a
 multi-executor cluster reading ~100 TB, so every default here is chosen to
 survive a 1000x scale-up: AQE on (runtime coalesce + skew-join handling),
 shuffle partitions sized to cores locally (overridable for a cluster),
-Arrow transfer on for the Pandas-UDF slow path, UTC session time zone so
-timestamp semantics are stable across engines.
+Arrow transfer on for the Pandas-UDF slow path.
+
+This is the only module that writes session state: ``SESSION_CONF``
+(applied by ``get_spark`` and ``ensure_session``) and, for a plan that
+needs a setting of its own, a private session clone (``plan_in_clone``).
 
 The ``file://`` scheme is served by ``jvm/NioLocalFileSystem.java`` (built
 into ``jvm/localfs.jar`` by ``tools/build_localfs_jar.py``): without
@@ -18,15 +21,25 @@ stock ``.crc`` checksum layer.  Other schemes are untouched.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "localfs.jar")
 LOCALFS_CONF = {
     "spark.hadoop.fs.file.impl": "mqtt_message_pump_spark.jvm.NioLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl":
         "mqtt_message_pump_spark.jvm.NioLocalFileSystem$Fs",
+}
+# settings that query results depend on (see plans/registry.py for the
+# parquet timestamp pair); the manifest_sink source implements
+# pushFilters, which Spark 4 refuses LOUDLY unless filterPushdown is on
+SESSION_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 # share of physical memory the local-mode JVM heap may grow to; the rest
 # stays for Python workers, the page cache and the OS
@@ -90,11 +103,7 @@ def get_spark(
             "true",
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the manifest_sink batch source implements pushFilters; Spark 4
-        # fails a pushdown-capable Python source LOUDLY unless this is on
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         # don't let shuffle/broadcast cleanup RPCs stall the next job
         # (observed multi-second pauses after shuffle-heavy queries)
@@ -115,19 +124,40 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
     )
-    for k, v in _localfs_conf(extra_conf or {}).items():
+    for k, v in {**SESSION_CONF, **_localfs_conf(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def ensure_utc(spark: SparkSession) -> SparkSession:
-    """Pin the session time zone to UTC (safe to call on a borrowed session).
+def ensure_session(spark: SparkSession) -> None:
+    """Apply ``SESSION_CONF`` to a session the engine is handed (the
+    driver contract's own); only reads when the settings are in place."""
+    for k, v in SESSION_CONF.items():
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
 
-    The driver hands us its own SparkSession; timestamps in the parquet
-    fixtures are naive, and DuckDB treats them as naive too, so UTC keeps
-    the two engines bit-identical.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark
+
+def plan_in_clone(
+    spark: SparkSession,
+    conf: dict[str, str],
+    build: Callable[[SparkSession], DataFrame],
+) -> DataFrame:
+    """``build(clone)`` planned in a private clone of ``spark``'s session
+    (its settings at the call, runtime ones included, plus ``conf``) and
+    returned as a frame of ``spark``, which is never written -- so no
+    other thread planning on it sees ``conf``."""
+    jclone = spark._jsparkSession.cloneSession()
+    for k, v in conf.items():
+        jclone.conf().set(k, v)
+    built = build(SparkSession(spark.sparkContext, jclone))
+    return rebind(built, spark)
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``'s session."""
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(
+        dataset.ofRows(spark._jsparkSession, df._jdf.logicalPlan()), spark
+    )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from mqtt_message_pump_spark.config import StoreConf
+from mqtt_message_pump_spark.session import plan_in_clone
 
 RAW_COLUMNS = "mid STRING, topic STRING, payload STRING, collect_datetime TIMESTAMP"
 
@@ -1534,7 +1535,7 @@ def _prune_batches(
 _FLAT_SCAN_MIN = 8
 
 
-def _flat_kept_frame(reader, table_path: str, kept: "list[dict]"):
+def _flat_kept_frame(spark, table_path: str, kept: "list[dict]"):
     """ONE multi-file scan over the kept batches' recorded file lists
     instead of an N-child union -- the SCALE §10h residual closed: at
     1k-10k surviving batches a point lookup otherwise pays ~10 ms of
@@ -1572,21 +1573,18 @@ def _flat_kept_frame(reader, table_path: str, kept: "list[dict]"):
     # Above 32 root paths Spark schedules a LISTING JOB
     # (parallelPartitionDiscovery.threshold) whose fixed overhead
     # (~0.6 s) dwarfs a driver-side status sweep of a point lookup's
-    # ~fpp x N survivor files; raise the threshold for this plan only,
-    # bounded so a genuinely huge file set still lists in parallel.
-    spark = getattr(reader, "_spark", None)
-    conf_key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    prior = None
-    if spark is not None and len(files) <= 1024:
-        prior = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, str(len(files) + 1))
-    try:
-        out = reader.schema(phys).parquet(*files)
-    finally:
-        if prior is not None:
-            spark.conf.set(conf_key, prior)
-        elif spark is not None and len(files) <= 1024:
-            spark.conf.unset(conf_key)
+    # ~fpp x N survivor files; above the threshold, plan the scan in a
+    # private session clone with the threshold raised, bounded so a
+    # genuinely huge file set still lists in parallel.
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+    def scan(session):
+        return session.read.schema(phys).parquet(*files)
+
+    if int(spark.conf.get(threshold)) < len(files) <= 1024:
+        out = plan_in_clone(spark, {threshold: str(len(files))}, scan)
+    else:
+        out = scan(spark)
     if has_cd:
         out = out.withColumn(
             "collect_date",
@@ -1885,7 +1883,7 @@ def read_sink(
     # exactly Delta/Iceberg's OPTIMIZE story.
     from functools import reduce
 
-    flat = _flat_kept_frame(reader, table_path, kept)
+    flat = _flat_kept_frame(spark, table_path, kept)
     if flat is not None:
         return _maybe_collapse(flat)
     frames = _recorded_schema_frames(reader, table_path, kept)

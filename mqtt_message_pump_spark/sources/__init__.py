@@ -5,18 +5,3 @@ from mqtt_message_pump_spark.sources.testing import (
 
 __all__ = ["file_message_stream", "rate_message_stream"]
 
-
-def register_sink_sources(spark) -> None:
-    """Register both native reads of a manifest sink on this session:
-    ``format("sink_tail")`` (streaming change-feed) and
-    ``format("manifest_sink")`` (pruned snapshot-consistent batch read
-    with filter pushdown)."""
-    from mqtt_message_pump_spark.sources.manifestsink import (
-        register_manifest_sink_source,
-    )
-    from mqtt_message_pump_spark.sources.sinktail import (
-        register_sink_tail_source,
-    )
-
-    register_sink_tail_source(spark)
-    register_manifest_sink_source(spark)

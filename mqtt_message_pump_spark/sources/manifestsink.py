@@ -32,8 +32,8 @@ snapshot-consistent path BY DEFAULT:
   pre-widening batches NULL-fill and narrower numeric files cast up --
   the ``merge_schema`` read semantics as the default.
 
-Requires ``spark.sql.python.filterPushdown.enabled=true`` (set by
-:func:`session.get_spark`; Spark refuses a pushdown-capable Python
+Requires ``spark.sql.python.filterPushdown.enabled=true`` (in
+:data:`session.SESSION_CONF`; Spark refuses a pushdown-capable Python
 source loudly otherwise).  IO goes through the pluggable Python-native
 filesystem seam (:mod:`sources._fsio`), so the same source reads local
 paths and s3://hdfs:// URIs.  Reference anchor: the delegated SELECT
@@ -56,6 +56,7 @@ from pyspark.sql.datasource import (
 )
 
 
+from mqtt_message_pump_spark.session import ensure_session
 from mqtt_message_pump_spark.sinks import _check_epoch_namespace, _stat_str
 from mqtt_message_pump_spark.sources._fsio import fs_for
 from mqtt_message_pump_spark.sources.manifestio import (
@@ -428,12 +429,10 @@ class ManifestSinkReader(DataSourceReader):
 
 
 def register_manifest_sink_source(spark) -> None:
-    """Register ``format("manifest_sink")`` on this session (and enable
-    the Python filter-pushdown conf it requires)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # non-runtime-settable on some builds: get_spark sets it
+    """Register ``format("manifest_sink")`` on this session, with the
+    engine's session settings (its pushFilters needs Python filter
+    pushdown on; :func:`session.ensure_session`)."""
+    ensure_session(spark)
     spark.dataSource.register(ManifestSinkDataSource)
 
 

@@ -80,10 +80,6 @@ def mqtt_available() -> bool:
     return _DS_API
 
 
-def paho_available() -> bool:
-    return _paho is not None
-
-
 def clean_session_flag(options) -> bool:
     """Parse the ``clean_session`` reader option (string-typed, as all
     DataSource options are).  Default True, matching ``MqttConf``."""

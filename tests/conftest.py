@@ -39,8 +39,10 @@ SLOW_TIER: list[tuple[str, str | None, str | None]] = [
     ("test_mqtt_live_loopback.py", None, None),         # 38 s
     ("test_live_services.py", None, None),              # live brokers
     # whole-registry partitioning-invariance sweep (re-runs every query
-    # under alternative partitionings; the oracle gate covers results)
-    ("test_partition_invariance.py", None, None),       # 62 s
+    # under alternative partitionings; the oracle gate covers results);
+    # its checkpointed-query cases run in the fast tier
+    ("test_partition_invariance.py", None,
+     "test_result_invariant_under_partitioning"),       # 62 s
     # external-engine integration (spins a real JDBC engine)
     ("test_jdbc_sink.py", None, None),                  # 31 s
     # index build / reindex / crash-safety maintenance campaigns

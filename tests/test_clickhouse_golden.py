@@ -196,7 +196,6 @@ def test_reference_ini_dialect_loads_unchanged(tmp_path):
     # protocol twin 18123 (ADVICE r8: copying the native port verbatim
     # yields a URL com.clickhouse.jdbc can never connect to)
     assert cfg.store.url == "jdbc:clickhouse://127.0.0.1:18123/SimTest"
-    assert cfg.store.compress
     assert cfg.store.raw_table_name == "raw_message"
     assert cfg.store.adapter_table_name == "json_message"
     assert cfg.monitor_mqtt.keepalive == 60

@@ -171,10 +171,8 @@ def test_file_link_status(hadoop, tmp_path):
 
 
 def test_crc_sidecar_written_and_checked(spark, hadoop, tmp_path):
-    """Both APIs write a ``.crc`` sidecar, and a flipped byte fails the
-    read.  Reads go through the FileSystem API: the stock FileContext
-    binding (``LocalFs``) returns the flipped byte without an error, and
-    the new one behaves the same."""
+    """Both APIs write a ``.crc`` sidecar, and a flipped byte fails a
+    FileSystem read."""
     H, fs, fc, _, _ = hadoop
     data = bytes(range(100))
     f = H.Path(f"file://{tmp_path}/fs.bin")
@@ -194,6 +192,34 @@ def test_crc_sidecar_written_and_checked(spark, hadoop, tmp_path):
         inp = fs.open(path)
         with pytest.raises(Py4JJavaError) as err:
             inp.read()
+        inp.close()
+        assert err.value.java_exception.getClass().getName() == (
+            "org.apache.hadoop.fs.ChecksumException"
+        )
+
+
+def test_file_context_reads_check_crc(spark, hadoop, tmp_path):
+    """A flipped byte fails a FileContext read too, through ``open`` (the
+    streaming checkpoint's read) and through ``openFile``.  The stock
+    binding (``LocalFs``) returns the flipped byte without an error: its
+    ``FilterFs`` base sends both calls to the raw filesystem, past the
+    checksum layer."""
+    H, _, fc, _, _ = hadoop
+    path = H.Path(f"file://{tmp_path}/ck.bin")
+    out = _fc_create(spark, H, fc, path.toString())
+    out.write(bytes(range(100)))
+    out.close()
+    buf = spark.sparkContext._gateway.new_array(spark._jvm.byte, 100)
+    inp = fc.open(path)
+    assert inp.read(buf) == 100
+    inp.close()
+    raw = bytearray((tmp_path / "ck.bin").read_bytes())
+    raw[50] ^= 0xFF
+    (tmp_path / "ck.bin").write_bytes(bytes(raw))
+
+    for inp in (fc.open(path), fc.openFile(path).build().get()):
+        with pytest.raises(Py4JJavaError) as err:
+            inp.read(buf)
         inp.close()
         assert err.value.java_exception.getClass().getName() == (
             "org.apache.hadoop.fs.ChecksumException"

@@ -148,23 +148,22 @@ def test_frame_sample(spark):
     assert sorted(per_id[8]) == [0, 1000, 2000]
 
 
-def test_connected_components_known_graph(spark):
+def test_connected_components_known_graph(spark, monkeypatch):
     """Two chains and a singleton: labels must converge to the component
     minimum even across multi-hop paths (1-2, 2-3 => {1,2,3} -> 1) --
     identically on BOTH the driver union-find fast path (small edge
     lists) and the distributed min-label propagation (forced via
-    ``driver_threshold_edges=0``)."""
+    ``DRIVER_THRESHOLD_EDGES = 0``)."""
     vertices = spark.createDataFrame([(i,) for i in range(1, 8)], ["doc_id"])
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7)], ["id_a", "id_b"]
     )
     want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 5}
     for threshold in (500_000, 0):
+        monkeypatch.setattr(DD, "DRIVER_THRESHOLD_EDGES", threshold)
         got = {
             r["doc_id"]: r["group_id"]
-            for r in DD.connected_components(
-                vertices, edges, driver_threshold_edges=threshold
-            ).collect()
+            for r in DD.connected_components(vertices, edges).collect()
         }
         assert got == want, f"threshold={threshold}"
 
@@ -177,7 +176,7 @@ def test_embedding_near_dup_brute_force_guard(spark, sf_dir):
         DD.embedding_near_dup_pairs(emb, max_brute_force_rows=10).collect()
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     """A chain longer than max_iterations cannot reach its component
     minimum; returning those labels would silently masquerade as the
     transitive closure, so the operator must raise instead."""
@@ -185,12 +184,11 @@ def test_connected_components_unconverged_raises(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], ["id_a", "id_b"]
     )
+    # force the distributed propagation path: the driver union-find has
+    # no iteration cap to hit
+    monkeypatch.setattr(DD, "DRIVER_THRESHOLD_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        # force the distributed propagation path: the driver union-find
-        # has no iteration cap to hit
-        DD.connected_components(
-            vertices, chain, max_iterations=2, driver_threshold_edges=0
-        )
+        DD.connected_components(vertices, chain, max_iterations=2)
 
 
 def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
